@@ -27,36 +27,57 @@ class MinHashStoreSpec extends SparkSpec {
   private def split(df: org.apache.spark.sql.DataFrame) =
     (df.filter(col("doc_id") % 2 === 0), df.filter(col("doc_id") % 2 === 1))
 
+  private val docIds = (1L to 20L) ++ (30L to 33L)
+
+  /** Batch id sets for the equality tests: the even/odd split plus seeded
+    * random store/batch splits (both sides non-empty). */
+  private val batchSplits: Seq[Set[Long]] = docIds.filter(_ % 2 == 1).toSet +:
+    Seq(7L, 11L).map { seed =>
+      val r = new scala.util.Random(seed)
+      val batch = docIds.filter(_ => r.nextDouble() < 0.4).toSet
+      if (batch.isEmpty) Set(docIds.head) else if (batch.size == docIds.size) batch - docIds.head else batch
+    }
+
+  private def splitBy(df: org.apache.spark.sql.DataFrame, batch: Set[Long]) = {
+    val inBatch = col("doc_id").isin(batch.toSeq: _*)
+    (df.filter(!inBatch), df.filter(inBatch))
+  }
+
   test("incremental probe equals the full-corpus pair set restricted to batch-touching pairs") {
-    val (corpus, batch) = split(allDocs)
-    val path = Files.createTempDirectory("graft_mhstore").toString + "/store"
-    MinHashStore.write(corpus, col("text"), col("doc_id"), path, bands = 8)
-
-    val got = MinHashStore
-      .minHashPairsIncremental(spark, batch, col("text"), col("doc_id"), path, threshold = 0.3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-
     val full = Dedup
       .minHashPairs(allDocs, col("text"), col("doc_id"), threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    val expected = full.filter(p => p._1 % 2 == 1 || p._2 % 2 == 1)
-    assert(got == expected)
-    assert(got.exists(p => p._1 == 30L && p._2 == 31L && p._3 == 1.0), "cross-split exact dup must surface")
-    assert(expected.size < full.size, "fixture must also have corpus-only pairs the probe excludes")
+    for (batchIds <- batchSplits) {
+      val (corpus, batch) = splitBy(allDocs, batchIds)
+      val path = Files.createTempDirectory("graft_mhstore").toString + "/store"
+      MinHashStore.write(corpus, col("text"), col("doc_id"), path, bands = 8)
+
+      val got = MinHashStore
+        .minHashPairsIncremental(spark, batch, col("text"), col("doc_id"), path, threshold = 0.3)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+
+      val expected = full.filter(p => batchIds(p._1) || batchIds(p._2))
+      assert(got == expected, s"batch=${batchIds.toSeq.sorted}")
+      assert(expected.size < full.size, "fixture must also have corpus-only pairs the probe excludes")
+      if (batchIds == batchSplits.head)
+        assert(got.exists(p => p._1 == 30L && p._2 == 31L && p._3 == 1.0), "cross-split exact dup must surface")
+    }
   }
 
   test("incremental probe equality holds in the hot-bucket regime (maxBucket=1, sample on)") {
-    val (corpus, batch) = split(allDocs)
-    val path = Files.createTempDirectory("graft_mhstore_hot").toString + "/store"
-    MinHashStore.write(corpus, col("text"), col("doc_id"), path, bands = 8)
-    val got = MinHashStore
-      .minHashPairsIncremental(spark, batch, col("text"), col("doc_id"), path,
-        threshold = 0.3, maxBucket = 1, hotSample = 30)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     val full = Dedup
       .minHashPairs(allDocs, col("text"), col("doc_id"), threshold = 0.3, maxBucket = 1, hotSample = 30)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-    assert(got == full.filter(p => p._1 % 2 == 1 || p._2 % 2 == 1))
+    for (batchIds <- batchSplits) {
+      val (corpus, batch) = splitBy(allDocs, batchIds)
+      val path = Files.createTempDirectory("graft_mhstore_hot").toString + "/store"
+      MinHashStore.write(corpus, col("text"), col("doc_id"), path, bands = 8)
+      val got = MinHashStore
+        .minHashPairsIncremental(spark, batch, col("text"), col("doc_id"), path,
+          threshold = 0.3, maxBucket = 1, hotSample = 30)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+      assert(got == full.filter(p => batchIds(p._1) || batchIds(p._2)), s"batch=${batchIds.toSeq.sorted}")
+    }
   }
 
   test("append: new shingle sets extend the index, duplicate sets only add members") {
