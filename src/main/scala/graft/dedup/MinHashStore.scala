@@ -21,18 +21,24 @@ import org.apache.spark.sql.functions._
   *   banded/     (_shkey, _id, band, bh, bh2)  rep band hashes
   *
   * Scale shape: `minHashPairsIncremental` unions the store's banded rows
-  * (40 B/row, no shingles) with the batch's, so the candidate machinery —
-  * identical-set collapse, cold buckets, hot-bucket prefix extension +
-  * deterministic sample (see [[Dedup.minHashPairs]]) — sees exactly the
+  * (40 B/row, no shingles) with the batch's and runs the same
+  * [[PairCore]] plan as [[Dedup.minHashPairs]] — identical-set collapse,
+  * cold buckets, the over-cap probe that leaves the hot subtree out of the
+  * plan when no bucket exceeds `maxBucket`, and [[Dedup.minhashHot]]'s
+  * prefix extension + deterministic sample. It therefore sees exactly the
   * banding the full-corpus run would see, and the cold/prefix pair set is
   * provably the full-corpus pair set restricted to pairs touching the
   * batch (band hashes are id-independent). The hot-bucket SAMPLE path
   * ranks by representative id, which can differ from a full run's when a
   * shared set's store representative is not the global minimum — both
   * runs recover a valid deterministic sample; they coincide whenever
-  * `hotSample` covers the bucket. Only batch rows pay shingle/minhash
+  * `hotSample` covers the bucket. A live narrowing surfaces exactly as in
+  * the full run: `graft.minhash.hot` (rows routed through prefix
+  * extension) and `graft.minhash.hotrecall` (verified batch-touching pairs,
+  * and those found only by the sample), both rendered by
+  * [[graft.report.PipelineWarnings]]. Only batch rows pay shingle/minhash
   * kernel cost; store shingles are read only for the verified-candidate
-  * keys.
+  * keys, but the over-cap probe aggregates the store's banded rows once.
   */
 object MinHashStore {
 
@@ -85,7 +91,9 @@ object MinHashStore {
     * store and batch band rows IS the full-corpus banding.
     *
     * The typical admission flow: screen the batch, drop or canonicalize
-    * the flagged docs, then [[append]] the survivors. */
+    * the flagged docs, then [[append]] the survivors. Building the frame
+    * runs Spark jobs (the batch-side `truncate` cuts and the over-cap
+    * probe); the [[PairCore]] scaladoc states that contract. */
   def minHashPairsIncremental(
       spark: SparkSession,
       batch: DataFrame,
@@ -121,65 +129,24 @@ object MinHashStore {
     val reps = storeReps.unionAll(newReps.select(col("_shkey"), col("_sh")))
     val banded = spark.read.parquet(s"$path/banded")
       .unionAll(truncate(Dedup.bandedOf(newReps, g.numHashes, g.bands)))
-    // keys that have ≥ 1 batch member: rep-pair candidates must touch one
+    // keys that have ≥ 1 batch member: rep-pair candidates must touch one,
+    // and only their groups can hold identical-set pairs with a batch side
     val batchKeys = batchSh.select(col("_shkey")).distinct()
 
-    // 1. identical-set pairs touching the batch (corpus dups of a batch doc,
-    // batch-internal exact dups): jaccard 1.0 by identity
-    val samePairs = {
-      val dup = members
-        .join(batchKeys, Seq("_shkey")) // only groups with a batch member
-      dup.select(col("_shkey"), col("_id").as("id_a"), col("_new").as("_na"))
-        .join(dup.select(col("_shkey"), col("_id").as("id_b"), col("_new").as("_nb")), Seq("_shkey"))
-        .filter(col("id_a") < col("id_b") && (col("_na") || col("_nb")))
-        .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    }
-
-    // 2-3. the minHashPairs candidate machinery over the UNION banding
-    val counts = banded.groupBy(col("band"), col("bh")).agg(count(lit(1)).as("_bc"))
-    val cold = banded.join(counts.filter(col("_bc").between(2, maxBucket)), Seq("band", "bh"))
-    val hot = banded.join(counts.filter(col("_bc") > maxBucket), Seq("band", "bh"))
-    import org.apache.spark.sql.expressions.Window
-    val wHot = Window.partitionBy(col("band"), col("bh")).orderBy(col("_id"))
-    val hotSampled = hot.withColumn("_hr", row_number().over(wHot)).filter(col("_hr") <= hs).drop("_hr")
-
-    def pairsOf(bk: DataFrame, keys: Seq[String]): DataFrame =
-      bk.select((keys.map(col) ++ Seq(col("_shkey").as("_ka"), col("_id").as("id_a"))): _*)
-        .join(bk.select((keys.map(col) ++ Seq(col("_shkey").as("_kb"), col("_id").as("id_b"))): _*), keys)
-        .filter(col("id_a") < col("id_b"))
-        .select(col("_ka"), col("_kb"))
-
-    // 4. verify once per rep pair; only pairs whose key set touches the batch
-    val shingleOf = reps.select(col("_shkey"), col("_sh"))
-    val repPairs = pairsOf(cold, Seq("band", "bh"))
-      .unionAll(pairsOf(hot, Seq("band", "bh", "bh2")))
-      .unionAll(pairsOf(hotSampled, Seq("band", "bh")))
-      .distinct()
-      // touch-the-batch filter: two equi LEFT joins against the (small,
-      // broadcastable) batch key set — never an OR-condition join, which
-      // would plan as a nested-loop product
+    // the minHashPairs candidate machinery over the UNION banding; only
+    // candidates whose key set touches the batch are verified — two equi
+    // LEFT joins against the (small, broadcastable) batch key set, never an
+    // OR-condition join, which would plan as a nested-loop product
+    val candidates = PairCore
+      .bandedCandidates(banded, Dedup.ShingleKey.name, Seq("band", "bh"), maxBucket, Dedup.minhashHot(hs))
       .join(batchKeys.select(col("_shkey").as("_ka"), lit(true).as("_fa")), Seq("_ka"), "left")
       .join(batchKeys.select(col("_shkey").as("_kb"), lit(true).as("_fb")), Seq("_kb"), "left")
       .filter(col("_fa").isNotNull || col("_fb").isNotNull)
-      .join(shingleOf.select(col("_shkey").as("_ka"), col("_sh").as("_sh_a")), Seq("_ka"))
-      .join(shingleOf.select(col("_shkey").as("_kb"), col("_sh").as("_sh_b")), Seq("_kb"))
-      .select(col("_ka"), col("_kb"), Dedup.jaccardCol(col("_sh_a"), col("_sh_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-
-    // 5. expand through membership, keep pairs with ≥ 1 new side
-    val crossPairs = repPairs
-      .join(members.select(col("_shkey").as("_ka"), col("_id").as("_ia"), col("_new").as("_na")), Seq("_ka"))
-      .join(members.select(col("_shkey").as("_kb"), col("_id").as("_ib"), col("_new").as("_nb")), Seq("_kb"))
-      .filter(col("_na") || col("_nb"))
-      .select(
-        least(col("_ia"), col("_ib")).as("id_a"),
-        greatest(col("_ia"), col("_ib")).as("id_b"),
-        col("jaccard"))
-
-    samePairs
-      .unionAll(crossPairs)
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(max(col("jaccard")).as("jaccard"))
+    // expand through membership, keeping pairs with ≥ 1 batch side
+    PairCore.expand(members, Dedup.ShingleKey, same = batchKeys.withColumn("jaccard", lit(1.0)),
+      verified = Dedup.verifiedJaccard(candidates, reps, threshold),
+      score = "jaccard", combine = Some(max(_: Column)),
+      tags = Seq("_new"), keep = col("_new_a") || col("_new_b"))
   }
 
   // meta rides the same filesystem as the store (parquet, one row), so the

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.dedup.{Dedup, MinHashStore}
+import graft.report.PipelineWarnings
 
 /** Incremental MinHash store: batch screening against a persisted corpus
   * index must equal the full-corpus pair set restricted to batch-touching
@@ -72,11 +73,25 @@ class MinHashStoreSpec extends SparkSpec {
       val (corpus, batch) = splitBy(allDocs, batchIds)
       val path = Files.createTempDirectory("graft_mhstore_hot").toString + "/store"
       MinHashStore.write(corpus, col("text"), col("doc_id"), path, bands = 8)
-      val got = MinHashStore
-        .minHashPairsIncremental(spark, batch, col("text"), col("doc_id"), path,
+      val pw = PipelineWarnings.register(spark)
+      try {
+        val pairs = MinHashStore.minHashPairsIncremental(spark, batch, col("text"), col("doc_id"), path,
           threshold = 0.3, maxBucket = 1, hotSample = 30)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
-      assert(got == full.filter(p => batchIds(p._1) || batchIds(p._2)), s"batch=${batchIds.toSeq.sorted}")
+        val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+        assert(got == full.filter(p => batchIds(p._1) || batchIds(p._2)), s"batch=${batchIds.toSeq.sorted}")
+        // the narrowing is live, so both beacons ride the probe's own query
+        val observed = pairs.queryExecution.observedMetrics
+        assert(observed.get("graft.minhash.hot").exists(_.getLong(0) > 0), s"hot beacon missing: $observed")
+        val recall = observed.get("graft.minhash.hotrecall")
+        assert(recall.exists(_.getLong(1) > 0), s"hotrecall beacon missing: $observed")
+        // ... and PipelineWarnings renders them (a recall line only when the
+        // sample recovered something)
+        val recovered = recall.get.getLong(0)
+        val warnings = pw.await(minBeacons = 2)
+        assert(warnings.exists(_.contains("hot-bucket narrowing was live")), s"warnings: $warnings")
+        assert(warnings.exists(_.contains(s"sample recovered $recovered verified pair")) == (recovered > 0),
+          s"recovered=$recovered warnings: $warnings")
+      } finally pw.close()
     }
   }
 

@@ -447,6 +447,39 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("*(1) Project"), s"plan:\n$plan")
   }
 
+  test("banded pair operators: the hot subtree is planned only when a bucket is over the cap") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Window}
+    // near-dup variants share bands; exact copies collapse before banding
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+    val docs = ((1L to 12L).map(i => (i, s"$base extra$i tail$i")) ++
+      Seq((20L, base), (21L, base))).toDF("doc_id", "text")
+    val sigs = (1L to 30L).map(i => (i, Seq(0x0123456789abcdefL, 0x0123456789abcdeeL)(i.toInt % 2)))
+      .toDF("id", "sig")
+    val store = java.nio.file.Files.createTempDirectory("graft_plan_mhstore").toString + "/store"
+    graft.dedup.MinHashStore.write(docs.filter(col("doc_id") % 2 === 0), col("text"), col("doc_id"), store)
+    val batch = docs.filter(col("doc_id") % 2 === 1)
+    val callers: Seq[(String, Int => org.apache.spark.sql.DataFrame)] = Seq(
+      "minHashPairs" -> (cap => graft.dedup.Dedup.minHashPairs(docs, col("text"), col("doc_id"),
+        threshold = 0.3, maxBucket = cap)),
+      "hammingPairs" -> (cap => graft.dedup.Dedup.hammingPairs(sigs, col("sig"), col("id"),
+        maxHamming = 1, bands = 2, maxBucket = cap)),
+      "minHashPairsIncremental" -> (cap => graft.dedup.MinHashStore.minHashPairsIncremental(
+        spark, batch, col("text"), col("doc_id"), store, threshold = 0.3, maxBucket = cap)))
+    def joins(p: LogicalPlan) = p.collect { case j: Join => j }.size
+    def windows(p: LogicalPlan) = p.collect { case w: Window => w }.size
+    for ((name, run) <- callers) {
+      val cold = run(10000).queryExecution.optimizedPlan
+      val hot = run(1).queryExecution.optimizedPlan
+      assert(windows(cold) == 0, s"$name: no bucket over the cap, yet the plan windows:\n$cold")
+      assert(joins(hot) > joins(cold), s"$name: the cold plan must omit the hot-subtree joins " +
+        s"(${joins(cold)} joins cold, ${joins(hot)} hot)")
+    }
+    // minhash's hot policy ranks the deterministic sample with a window
+    for ((name, run) <- callers if name.startsWith("minHash"))
+      assert(windows(run(1).queryExecution.optimizedPlan) > 0, s"$name: hot sample window missing")
+  }
+
   test("violations plan is lazy: building it launches no Spark job") {
     // (the parquet read itself runs a footer-inference job — do it first)
     val df = spark.read.parquet(li).withColumn("_rid", col("l_orderkey"))
