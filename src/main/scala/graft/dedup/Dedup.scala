@@ -152,9 +152,9 @@ object Dedup {
     *    hammingPairs' interleaved re-split (provably exact at any
     *    maxBucket): a true pair whose ONLY agreeing band was hot is dropped.
     *    The rows routed through it surface as the named observation
-    *    `graft.minhash.hot` (observedMetrics key `hot_rows`, readable from
-    *    any QueryExecutionListener); absent or 0 means the fast path was
-    *    exact.
+    *    `graft.minhash.hot` (observedMetrics key `hot_rows`, collected by
+    *    [[graft.report.PipelineWarnings]]); absent or 0 means the fast path
+    *    was exact.
     *  - Deterministic sample (source bit 4): the `hs` smallest-id members of
     *    each hot bucket (the per-bucket all-pairs budget a cold bucket gets
     *    at the cap) take the full single-band path, so hot-band-only true

@@ -56,6 +56,10 @@ final class PipelineWarnings private (spark: SparkSession) extends AutoCloseable
   def warnings: Seq[String] =
     Beacons.flatMap { name => seen.get(name).flatMap(render(name, _)) }
 
+  /** Raw values of beacon `name` (its observed row, NULL read as 0), if it
+    * arrived — for callers that need the numbers, not the rendered text. */
+  def values(name: String): Option[Seq[Long]] = seen.get(name)
+
   /** Poll (listener delivery is async) until at least `minBeacons` beacon
     * rows arrived or `timeoutMs` passed, then return [[warnings]]. */
   def await(minBeacons: Int = 1, timeoutMs: Long = 10000L): Seq[String] = {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bucketed table storage for CO-LOCATED joins: write once bucketed+sorted
   * by the join key, and every subsequent key-equijoin between tables
@@ -27,25 +27,4 @@ object BucketedStore {
       .sortBy(key)
       .mode("overwrite")
       .saveAsTable(table)
-
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** FK violations between two bucketed tables (both bucketed on their join
-    * key with the same bucket count): rows of `factTable` whose `factKey`
-    * has no match in `dimTable.dimKey` — a left-anti join that runs
-    * SHUFFLE-FREE over the co-located buckets. */
-  def fkViolationsBucketed(
-      spark: SparkSession,
-      factTable: String,
-      factKey: String,
-      dimTable: String,
-      dimKey: String
-  ): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    spark.table(factTable).join(
-      spark.table(dimTable).select(col(dimKey).as(factKey)),
-      Seq(factKey),
-      "left_anti"
-    )
-  }
 }

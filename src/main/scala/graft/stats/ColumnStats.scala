@@ -11,25 +11,13 @@ import org.apache.spark.sql.functions._
   */
 object ColumnStats {
 
-  final case class ColStat(
-      column: String,
-      count: Long,
-      nullCount: Long,
-      distinct: Long,
-      min: Option[Double],
-      max: Option[Double]
-  )
-
-  /** Long-format stats frame: one row per profiled column. `exactDistinct`
-    * uses count(distinct) (for oracle comparability in tests); the scale
-    * default is approx_count_distinct (HLL++, mergeable, single-pass even for
-    * many columns). */
   /** Per-column profile card. Default (approx) mode is ONE wide
     * aggregation pass; `exactDistinct = true` additionally runs one exact
     * two-phase countDistinct job PER column, concurrently with the base
     * agg (k+1 independent jobs — not a single-snapshot read: on a source
     * mutating between jobs the counts can disagree; profile over a
-    * consistent snapshot, as all engine callers do). */
+    * consistent snapshot, as all engine callers do). Output is long
+    * format: one (column, cnt, nulls, dcount, vmin, vmax) row per column. */
   def profile(df: DataFrame, cols: Seq[String], exactDistinct: Boolean = false): DataFrame = {
     val aggs: Seq[Column] = cols.flatMap { c =>
       val isNumeric = df.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]

@@ -89,6 +89,8 @@ class MinHashStoreSpec extends SparkSpec {
         val recovered = recall.get.getLong(0)
         val warnings = pw.await(minBeacons = 2)
         assert(warnings.exists(_.contains("hot-bucket narrowing was live")), s"warnings: $warnings")
+        val raw = pw.values("graft.minhash.hotrecall")
+        assert(raw.contains(Seq(recovered, recall.get.getLong(1))), s"raw hotrecall $raw vs observed $recall")
         assert(warnings.exists(_.contains(s"sample recovered $recovered verified pair")) == (recovered > 0),
           s"recovered=$recovered warnings: $warnings")
       } finally pw.close()
