@@ -144,4 +144,71 @@ class PropertySpec extends SparkSpec {
       assert(got == expected, s"seed=$seed expr=$e")
     }
   }
+
+  test("runCsv report equals run() over the same rows in 1, 3 or 4 partitions") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.scalacheck.{Gen, Prop, Test}
+    import org.scalacheck.Prop.propBoolean
+    import graft.report.ValidationReport
+    import graft.sources.TableSource
+
+    val headers = Seq("id", "name", "cat", "score")
+    // ids: blank, duplicated (small pool), non-integer; names/cats/scores
+    // with pattern, enum and range misses and non-numbers
+    val cell: Map[String, Gen[String]] = Map(
+      "id" -> Gen.frequency(6 -> Gen.choose(1, 12).map(_.toString), 1 -> Gen.const(""), 1 -> Gen.const("x7")),
+      "name" -> Gen.oneOf("ann", "bob", "Bob", "c3", ""),
+      "cat" -> Gen.oneOf("a", "b", "c", "z", ""),
+      "score" -> Gen.oneOf("0", "42.5", "100", "101", "-3", "n/a", "")
+    )
+    // ragged rows keep at least 2 cells so no line is empty
+    val line: Gen[Seq[String]] = for {
+      width <- Gen.frequency(8 -> Gen.const(headers.size), 1 -> Gen.choose(2, headers.size - 1), 1 -> Gen.const(headers.size + 1))
+      cells <- Gen.sequence[List[String], String](headers.map(cell) :+ Gen.const("extra"))
+    } yield cells.take(width)
+    val grid = Gen.choose(0, 25).flatMap(Gen.listOfN(_, line))
+    val schemas = Gen.oneOf(Seq(Nil, Seq("id"))).map { pk =>
+      TableSchema(
+        Seq(
+          Field("id", "integer", constraints = fc.copy(required = true, unique = true)),
+          Field("name", constraints = fc.copy(pattern = Some("[a-z]+"))),
+          Field("cat", constraints = fc.copy(enumVals = Some(Seq("a", "b", "c")))),
+          Field("score", "number", constraints = fc.copy(minimum = Some(0), maximum = Some(100)))
+        ),
+        primaryKey = pk
+      )
+    }
+
+    def untimed(r: ValidationReport): ValidationReport =
+      r.copy(time = 0, tables = r.tables.map(_.copy(time = 0)))
+
+    val prop = Prop.forAll(grid, schemas) { (lines, schema) =>
+      val f = java.io.File.createTempFile("partinv", ".csv")
+      try {
+        java.nio.file.Files.writeString(f.toPath, (headers +: lines).map(_.mkString(",")).mkString("\n"))
+        val path = f.getPath
+        val (viaCsv, _) = ValidationRunner.runCsv(spark, path, schema)
+        val structural = TableSource.readCsv(spark, path).toOption.get.structureViolations
+        val rows = lines.zipWithIndex.map { case (cells, i) =>
+          Row.fromSeq(cells.padTo(headers.size, null).take(headers.size) :+ (i + 2L))
+        }
+        val sparkSchema =
+          StructType(headers.map(StructField(_, StringType)) :+ StructField("_row_number", LongType))
+        val cfg = ValidationConfig(rowNumberCol = "_row_number", source = path, headerInRowCount = true)
+        Prop.all(Seq(1, 3, 4).map { k =>
+          val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, k), sparkSchema)
+          val (rep, _) = ValidationRunner.run(df, schema, cfg)
+          val t = rep.tables.head
+          val merged = (structural ++ t.errors).sortBy(v => (v.rowNumber.getOrElse(0L), v.columnNumber.getOrElse(0)))
+          val table = t.copy(errors = merged, errorCount = merged.size.toLong, valid = merged.isEmpty)
+          val expected = rep.copy(valid = table.valid, errorCount = table.errorCount, tables = Seq(table))
+          (untimed(viaCsv) == untimed(expected)) :| s"k=$k rows=${lines.size}"
+        }: _*)
+      } finally f.delete()
+    }
+    val params = Test.Parameters.default.withMinSuccessfulTests(12).withInitialSeed(20261018L).withWorkers(1)
+    val res = Test.check(params, prop)
+    assert(res.passed, res.status.toString)
+  }
 }
