@@ -324,10 +324,8 @@ object RowChecks {
       )
     )
     if (checks.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        ST(vSchema.fields :+ StructField("row", ArrayType(StringType)))
-      )
+      return graft.sources.TableSource.localFrame(
+        spark, Nil, ST(vSchema.fields :+ StructField("row", ArrayType(StringType))))
     val entries = checks.map { ck =>
       when(
         ck.cond,

@@ -613,7 +613,8 @@ object Dedup {
     * action (localCheckpoint(true), checkpoint(true), or a write +
     * read-back) — the per-round convergence count rides the frame as an
     * Observation whose metrics only arrive when that action runs; a lazy
-    * cut would block the round loop indefinitely.
+    * cut fails the round with an IllegalStateException after a bounded
+    * wait.
     * The default `localCheckpoint` stores blocks on executors — fast, but
     * lost with an executor; long cluster runs should pass
     * `_.checkpoint(true)` (reliable storage via spark.checkpoint.dir) or a
@@ -688,7 +689,7 @@ object Dedup {
           .observe(obs, coalesce(sum(col("_chg")), lit(0L)).as("_changed"))
           .select(col("id"), col("comp"))
       )
-      val changed = obs.get("_changed").asInstanceOf[Long]
+      val changed = roundMetrics(obs).getAs[Long]("_changed")
       labels = next
       converged = changed == 0L
       iter += 1
@@ -786,8 +787,8 @@ object Dedup {
         smallStar(largeStar(edges)).observe(obs,
           count(lit(1)).as("_c"),
           coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("_h")))
-      val m = obs.get
-      val nextSig = (m("_c").asInstanceOf[Long], m("_h").asInstanceOf[Long])
+      val m = roundMetrics(obs)
+      val nextSig = (m.getAs[Long]("_c"), m.getAs[Long]("_h"))
       converged = nextSig == sig
       edges = next
       sig = nextSig
@@ -940,6 +941,24 @@ object Dedup {
       r
     }
   }
+
+  /** How long a CC round waits for its observed metrics once `truncate`
+    * has returned. An eager cut has already run the round, so the metrics
+    * are only a listener-bus hop away; a lazy one never delivers them. */
+  private val RoundMetricsWait = scala.concurrent.duration.FiniteDuration(30, "s")
+
+  /** A CC round's observed metrics, or an IllegalStateException naming the
+    * `truncate` contract instead of an indefinite wait. */
+  private def roundMetrics(obs: org.apache.spark.sql.Observation): org.apache.spark.sql.Row =
+    try scala.concurrent.Await.result(obs.future, RoundMetricsWait)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"connected-components round metrics did not arrive within $RoundMetricsWait: " +
+            "`truncate` must run an eager Spark action on the round frame " +
+            "(e.g. _.localCheckpoint(true), _.checkpoint(true) or a write + read-back); " +
+            "a lazy cut such as identity never executes the round")
+    }
 
   private def warnIfUnconverged(r: CcResult, who: String): Unit =
     if (!r.converged)

@@ -192,7 +192,7 @@ object ValidationRunner {
       )
     )
     if (compiled.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], vSchema)
+      return graft.sources.TableSource.localFrame(spark, Nil, vSchema)
     val entries = compiled.map { ck =>
       when(
         ck.cond,
@@ -237,6 +237,20 @@ object ValidationRunner {
       ) ++ extra: _*)
   }
 
+  /** The report's per-code cap (bounded by default — see ValidationOptions):
+    * the first `cap` violations of each code by row number. The window
+    * shuffles only VIOLATIONS, never source rows. */
+  private[graft] def capPerCode(violations: DataFrame, cap: Option[Int]): DataFrame = cap match {
+    case Some(n) =>
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("code")).orderBy(col("row_number").asc_nulls_first)
+      violations
+        .withColumn("_rk", row_number().over(w))
+        .filter(col("_rk") <= n)
+        .drop("_rk")
+    case None => violations
+  }
+
   /** Execute the plan and assemble the reference-shaped report (driver-side
     * post-processing per jobs.py:155-200: misleading-uniqueness filter, error
     * caps, row/header injection, status assignment). */
@@ -250,18 +264,7 @@ object ValidationRunner {
 
     import org.apache.spark.sql.Row
     val collected: Seq[Violation] = {
-      // per-code cap (bounded by default — see ValidationOptions): the
-      // window shuffles only VIOLATIONS, never source rows
-      val capped = cfg.options.errorLimitPerCode match {
-        case Some(cap) =>
-          import org.apache.spark.sql.expressions.Window
-          val w = Window.partitionBy(col("code")).orderBy(col("row_number").asc_nulls_first)
-          result.violations
-            .withColumn("_rk", row_number().over(w))
-            .filter(col("_rk") <= cap)
-            .drop("_rk")
-        case None => result.violations
-      }
+      val capped = capPerCode(result.violations, cfg.options.errorLimitPerCode)
       // NOTE: no DataFrame-level orderBy here — a global sort directly above
       // the scan runs a range-sampling job that would execute the observed
       // scan TWICE (double-counting rows and doubling I/O). The collected

@@ -5,8 +5,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
 
 import graft.sources.TableSource.{CsvTable, FormatError, IoError, SourceContentError, SourceError}
 
@@ -26,8 +25,9 @@ import graft.sources.TableSource.{CsvTable, FormatError, IoError, SourceContentE
   * formats are public specs: ESRI Shapefile Technical Description 1998,
   * dBASE III/IV DBF layout). Like the xlsx path, parsing is driver-side and
   * size-guarded — a zipped upload is definitionally a small single file (zip
-  * members can't be split for parallel scan); the resulting DataFrame is
-  * distributed and flows through the same validation plan as any source.
+  * members can't be split for parallel scan); the resulting DataFrame is a
+  * single-partition local relation (`TableSource.localFrame`) and flows
+  * through the same validation plan as any source.
   *
   * The writer half emits a minimal valid point-shapefile zip (DBF all-C
   * fields, SHP point/null-shape records, SHX index) for round-trip tests and
@@ -50,19 +50,7 @@ object ShapefileSource {
 
   /** Parse zipped shapefile payload bytes (the upload-stream entry point). */
   def readShapefileBytes(spark: SparkSession, bytes: Array[Byte]): Either[SourceError, CsvTable] =
-    parseGrid(bytes).map { grid =>
-      val width = grid.iterator.map(_.length).maxOption.getOrElse(0)
-      val headers = grid.headOption.getOrElse(IndexedSeq.empty).padTo(width, null: String)
-      val rows = grid.iterator.zipWithIndex.drop(1).map { case (cells, idx) =>
-        Row.fromSeq(cells.padTo(width, null: String) :+ (idx + 1L)) // header is row 1
-      }.toList
-      val schema = StructType(
-        headers.zipWithIndex.map { case (h, i) =>
-          StructField(Option(h).getOrElse(s"_c$i"), StringType)
-        } :+ StructField("_row_number", LongType)
-      )
-      CsvTable(spark.createDataFrame(spark.sparkContext.parallelize(rows), schema), headers, Seq.empty)
-    }
+    parseGrid(bytes).map(TableSource.gridTable(spark, _))
 
   /** Header row (field names + adr_geometry_check) followed by one row per
     * DBF record, geometry presence rendered "True"/"False" (the lexical form

@@ -114,9 +114,40 @@ object TableSource {
       Row.fromSeq(cells.padTo(arity, null).take(arity) :+ rowNum)
     }
     val schema = StructType(headers.map(h => StructField(h, StringType)) :+ StructField("_row_number", LongType))
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows.toList), schema)
-    Right(CsvTable(df, headers, viols.result()))
+    Right(CsvTable(localFrame(spark, rows, schema), headers, viols.result()))
   }
+
+  /** A parsed cell grid (row 1 = header, ragged rows padded with nulls to
+    * the widest row) in the CSV-path table shape: all-string columns named
+    * by row 1 (`_c<i>` for a missing name), `_row_number` (header = 1, first
+    * data row = 2). Blank grid rows are kept. The Excel and shapefile
+    * readers build their table through this. */
+  private[graft] def gridTable(spark: SparkSession, grid: IndexedSeq[IndexedSeq[String]]): CsvTable = {
+    val width = grid.iterator.map(_.length).maxOption.getOrElse(0)
+    val headers = grid.headOption.getOrElse(IndexedSeq.empty).padTo(width, null: String)
+    val rows = grid.iterator.zipWithIndex.drop(1).map { case (cells, idx) =>
+      Row.fromSeq(cells.padTo(width, null: String) :+ (idx + 1L)) // header is row 1
+    }.toSeq
+    val schema = StructType(
+      headers.zipWithIndex.map { case (h, i) =>
+        StructField(Option(h).getOrElse(s"_c$i"), StringType)
+      } :+ StructField("_row_number", LongType)
+    )
+    CsvTable(localFrame(spark, rows, schema), headers, Seq.empty)
+  }
+
+  /** The frame for rows that already sit on the driver (a parsed upload, a
+    * transposed table, an empty result): a local relation in ONE partition.
+    * A local relation carries its size, so the planner broadcasts it into
+    * every join; the single partition satisfies every aggregate and window
+    * distribution above it, so a whole validation over it plans no hash
+    * exchange. Both halves are needed: an RDD-backed frame has no size
+    * statistics (sort-merge joins, re-shuffled to the shuffle partition
+    * count even after a coalesce), and a bare local relation is still
+    * sliced `defaultParallelism` ways. `coalesce(1)` merges the slices
+    * without a shuffle. */
+  private[graft] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
 
   /** JSON reader: array-of-objects → DataFrame. A GeoJSON FeatureCollection
     * (a `features` array) is FLATTENED like the reference does
@@ -159,7 +190,8 @@ object TableSource {
 
   /** Transpose for small indicator-list frames (reference jobs.py:390-396:
     * `df.T` when schema.transpose). Driver-side by design — the reference
-    * feature exists for tiny sideways fixture tables, never for big data. */
+    * feature exists for tiny sideways fixture tables, never for big data —
+    * so the result is a [[localFrame]]. */
   def transpose(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val rows = df.collect()
@@ -171,6 +203,6 @@ object TableSource {
     val outSchema = StructType(
       StructField("_c0", StringType) +: rows.indices.map(i => StructField(s"_c${i + 1}", StringType))
     )
-    spark.createDataFrame(spark.sparkContext.parallelize(transposed.toList), outSchema)
+    localFrame(spark, transposed, outSchema)
   }
 }

@@ -5,8 +5,7 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.SparkSession
 
 import graft.sources.TableSource.{CsvTable, FormatError, IoError, SourceContentError, SourceError}
 
@@ -23,9 +22,11 @@ import graft.sources.TableSource.{CsvTable, FormatError, IoError, SourceContentE
   * Scale note: an Excel workbook is definitionally a small single file (a
   * zip member can't be split for parallel scan), so — like the reference,
   * and like `TableSource.transpose` — parsing is driver-side and
-  * size-guarded; the resulting DataFrame is distributed and flows through
-  * the exact same validation plan as any parquet/CSV source. Big data never
-  * arrives as xlsx; fixture and upload data does.
+  * size-guarded; the resulting DataFrame is a single-partition local
+  * relation (`TableSource.localFrame`, so the validation of an upload plans
+  * no shuffle) and flows through the exact same validation plan as any
+  * parquet/CSV source. Big data never arrives as xlsx; fixture and upload
+  * data does.
   *
   * The writer half covers the reference's Excel re-serialisation surface
   * (`jobs.py:410-415` writes the preprocessed frame back to an in-memory
@@ -55,20 +56,7 @@ object XlsxSource {
       bytes: Array[Byte],
       extension: String = "xlsx"
   ): Either[SourceError, CsvTable] =
-    parseGrid(bytes, extension).map { grid =>
-      val width = grid.iterator.map(_.length).maxOption.getOrElse(0)
-      val headers = grid.headOption.getOrElse(IndexedSeq.empty).padTo(width, null: String)
-      val rows = grid.iterator.zipWithIndex.drop(1).map { case (cells, idx) =>
-        Row.fromSeq(cells.padTo(width, null: String) :+ (idx + 1L)) // header is row 1
-      }.toList
-      val schema = StructType(
-        headers.zipWithIndex.map { case (h, i) =>
-          StructField(Option(h).getOrElse(s"_c$i"), StringType)
-        } :+ StructField("_row_number", LongType)
-      )
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
-      CsvTable(df, headers, Seq.empty)
-    }
+    parseGrid(bytes, extension).map(TableSource.gridTable(spark, _))
 
   /** The raw cell grid (1 row per sheet row, sparse cells resolved), before
     * any header/DataFrame shaping. Exposed for tests. */

@@ -11,6 +11,11 @@ import org.apache.spark.sql.functions._
   */
 object ColumnStats {
 
+  /** [[profile]]'s concurrent jobs: at most this many in flight, and a
+    * fixed bound on the wait for all of them. */
+  private val MaxJobsInFlight = 3
+  private val JobsWait = scala.concurrent.duration.FiniteDuration(1, "h")
+
   /** Per-column profile card. Default (approx) mode is ONE wide
     * aggregation pass; `exactDistinct = true` additionally runs one exact
     * two-phase countDistinct job PER column, concurrently with the base
@@ -39,18 +44,36 @@ object ColumnStats {
     // column), submitted CONCURRENTLY with the base agg from driver futures
     // (guide §2.6: actions are only sequential because the driver calls
     // them sequentially). Same exact results, ~k× less pre-shuffle volume.
+    // The jobs run on their own pool of MaxJobsInFlight threads under one
+    // job group; the futures are combined on the completing thread, so the
+    // first failure (or the fixed wait running out) surfaces at once,
+    // cancels the group's running and queued jobs and is rethrown.
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
+    val sc = df.sparkSession.sparkContext
+    val group = s"graft.profile.${java.util.UUID.randomUUID()}"
+    val pool = ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(MaxJobsInFlight))
+    def job[T](body: => T): Future[T] = Future {
+      sc.setJobGroup(group, "graft.profile", interruptOnCancel = true)
+      try body finally sc.clearJobGroup()
+    }(pool)
+    val rowF = job(wide.collect()(0)) // melt to long format driver-side (one row collected)
     val distinctF: Seq[Future[Long]] =
       if (!exactDistinct) Nil
-      else cols.map(c => Future(df.select(col(c)).agg(countDistinct(col(c))).head().getLong(0)))
-    val rowF = Future(wide.collect()(0))
-    // melt to long format driver-side (one row collected)
-    val row = Await.result(rowF, Duration.Inf)
-    val dcounts: Map[String, Long] =
-      if (!exactDistinct) Map.empty
-      else cols.zip(distinctF.map(Await.result(_, Duration.Inf))).toMap
+      else cols.map(c => job(df.select(col(c)).agg(countDistinct(col(c))).head().getLong(0)))
+    val all = {
+      implicit val onCompletion: ExecutionContext = ExecutionContext.parasitic
+      rowF.zip(Future.sequence(distinctF))
+    }
+    val (row, distincts) =
+      try Await.result(all, JobsWait)
+      catch {
+        case e: Throwable =>
+          pool.shutdownNow()
+          sc.cancelJobGroupAndFutureJobs(group)
+          throw e
+      } finally pool.shutdown()
+    val dcounts: Map[String, Long] = cols.zip(distincts).toMap
     val spark = df.sparkSession
     import spark.implicits._
     cols.map { c =>

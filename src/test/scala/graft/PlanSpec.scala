@@ -63,6 +63,35 @@ class PlanSpec extends SparkSpec {
     viols.count() // and it executes
   }
 
+  test("uploads (readCsv, readXlsxBytes): the capped violations query plans no hash exchange") {
+    import java.nio.file.Files
+    import graft.sources.{TableSource, XlsxSource}
+    val grid = Seq("id", "code") +: (1 to 40).map { i =>
+      Seq(if (i % 13 == 0) "" else (i % 30).toString, if (i % 7 == 0) "X1" else "ab")
+    }
+    val dir = Files.createTempDirectory("graft_plan")
+    val csv = dir.resolve("upload.csv")
+    Files.writeString(csv, grid.map(_.mkString(",")).mkString("\n"))
+    val xlsx = dir.resolve("upload.xlsx")
+    XlsxSource.writeXlsx(xlsx.toString, Seq(("S", grid)))
+    val schema = TableSchema(Seq(
+      Field("id", "integer", constraints = fc.copy(required = true, unique = true)),
+      Field("code", constraints = fc.copy(pattern = Some("[a-z]+")))
+    ))
+    val frames = Seq(
+      "csv" -> TableSource.readCsv(spark, csv.toString).toOption.get.df,
+      "xlsx" -> XlsxSource.readXlsxBytes(spark, Files.readAllBytes(xlsx)).toOption.get.df
+    )
+    for ((name, df) <- frames) {
+      val violations = ValidationRunner.plan(df, schema, ValidationConfig(rowNumberCol = "_row_number")).violations
+      val capped = ValidationRunner.capPerCode(violations, Some(1000))
+      val codes = capped.collect().map(_.getString(0)).toSet
+      assert(codes == Set("required-constraint", "unique-constraint", "pattern-constraint"), s"$name: $codes")
+      val plan = executedPlan(capped) // AQE prints the final AND the initial plan
+      assert(!plan.contains("Exchange hashpartitioning"), s"$name upload must not shuffle:\n$plan")
+    }
+  }
+
   test("uniqueness plan: partial aggregation before the exchange (map-side combine)") {
     val df = spark.read.parquet(li).withColumn("_rid", col("l_orderkey") * 10 + col("l_linenumber"))
     val schema = TableSchema(Seq(Field("l_suppkey", ftype = "integer", constraints = fc.copy(unique = true))))

@@ -48,6 +48,21 @@ class SourceSpec extends SparkSpec {
     assert(report.valid && report.errorCount == 0)
   }
 
+  test("header-only uploads (CSV and XLSX): a one-row, valid, successful report") {
+    val schema = TableSchema(Seq(
+      Field("id", "integer", constraints = fc.copy(required = true, unique = true)),
+      Field("name")
+    ))
+    val csv = writeTmp("empty.csv", "id,name\n")
+    val xlsx = Files.createTempDirectory("graft_src").resolve("empty.xlsx").toString
+    graft.sources.XlsxSource.writeXlsx(xlsx, Seq(("S", Seq(Seq("id", "name")))))
+    for ((report, status) <- Seq(ValidationRunner.runCsv(spark, csv, schema), ValidationRunner.runXlsx(spark, xlsx, schema))) {
+      assert(report.tables.head.rowCount == 1) // the header row alone
+      assert(report.valid && report.errorCount == 0)
+      assert(status == "success")
+    }
+  }
+
   test("extra-value on rows wider than the header") {
     val path = writeTmp("extra.csv", "a,b\n1,2\n1,2,3\n")
     val Right(csv) = TableSource.readCsv(spark, path): @unchecked

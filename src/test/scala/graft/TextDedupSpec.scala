@@ -327,6 +327,17 @@ class TextDedupSpec extends SparkSpec {
     assert(r("id").getLong(1) == 3)
   }
 
+  test("profile(exactDistinct): a failing column job makes profile throw promptly") {
+    val boom = udf((i: Long) => if (i == 3L) throw new IllegalArgumentException("boom") else i)
+    val df = spark.range(0, 8, 1, 2).select(
+      Seq(col("id"), boom(col("id")).as("bad")) ++ (1 to 4).map(k => (col("id") % k).as(s"m$k")): _*)
+    val t0 = System.nanoTime()
+    val e = intercept[Exception](ColumnStats.profile(df, df.columns.toSeq, exactDistinct = true))
+    assert((System.nanoTime() - t0) / 1e9 < 60, "profile must fail fast, not wait on the other jobs")
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(x => String.valueOf(x.getMessage).contains("boom")), e.toString)
+  }
+
   test("drift: identical distributions give PSI~0 and KS~0, shifted ones do not") {
     val a = (1 to 1000).map(i => i % 100).toDF("x")
     val b = (1 to 1000).map(i => i % 100).toDF("x")
@@ -495,6 +506,15 @@ class TextDedupSpec extends SparkSpec {
     val comp = Dedup.components(corpus, col("doc_id"), chain, col("id_a"), col("id_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(comp.length == 300 && comp.forall(_._2 == 1L))
+  }
+
+  test("components with a lazy truncate (identity) throws the truncate contract instead of hanging") {
+    val corpus = (1L to 4L).map(i => (i, s"d$i")).toDF("doc_id", "text")
+    val pairs = Seq((1L, 2L), (3L, 4L)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.components(corpus, col("doc_id"), pairs, col("id_a"), col("id_b"), truncate = identity)
+    }
+    assert(e.getMessage.contains("`truncate` must run an eager Spark action"), e.getMessage)
   }
 
   test("dedupLines: a separator with regex metacharacters is treated literally") {
