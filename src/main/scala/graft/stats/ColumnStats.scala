@@ -49,7 +49,8 @@ object ColumnStats {
     // first failure (or the fixed wait running out) surfaces at once,
     // cancels the group's running and queued jobs and is rethrown.
     import scala.concurrent.{Await, ExecutionContext, Future}
-    val sc = df.sparkSession.sparkContext
+    val spark = df.sparkSession
+    val sc = spark.sparkContext
     val group = s"graft.profile.${java.util.UUID.randomUUID()}"
     val pool = ExecutionContext.fromExecutorService(
       java.util.concurrent.Executors.newFixedThreadPool(MaxJobsInFlight))
@@ -74,7 +75,6 @@ object ColumnStats {
           throw e
       } finally pool.shutdown()
     val dcounts: Map[String, Long] = cols.zip(distincts).toMap
-    val spark = df.sparkSession
     import spark.implicits._
     cols.map { c =>
       (
