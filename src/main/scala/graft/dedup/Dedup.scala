@@ -613,8 +613,7 @@ object Dedup {
     * action (localCheckpoint(true), checkpoint(true), or a write +
     * read-back) — the per-round convergence count rides the frame as an
     * Observation whose metrics only arrive when that action runs; a lazy
-    * cut fails the round with an IllegalStateException after a bounded
-    * wait.
+    * cut fails the round with an IllegalStateException.
     * The default `localCheckpoint` stores blocks on executors — fast, but
     * lost with an executor; long cluster runs should pass
     * `_.checkpoint(true)` (reliable storage via spark.checkpoint.dir) or a
@@ -689,7 +688,7 @@ object Dedup {
           .observe(obs, coalesce(sum(col("_chg")), lit(0L)).as("_changed"))
           .select(col("id"), col("comp"))
       )
-      val changed = roundMetrics(obs).getAs[Long]("_changed")
+      val changed = roundMetrics(pairs.sparkSession, obs).getAs[Long]("_changed")
       labels = next
       converged = changed == 0L
       iter += 1
@@ -787,7 +786,7 @@ object Dedup {
         smallStar(largeStar(edges)).observe(obs,
           count(lit(1)).as("_c"),
           coalesce(sum(xxhash64(col("src"), col("dst"))), lit(0L)).as("_h")))
-      val m = roundMetrics(obs)
+      val m = roundMetrics(edges.sparkSession, obs)
       val nextSig = (m.getAs[Long]("_c"), m.getAs[Long]("_h"))
       converged = nextSig == sig
       edges = next
@@ -942,23 +941,40 @@ object Dedup {
     }
   }
 
-  /** How long a CC round waits for its observed metrics once `truncate`
-    * has returned. An eager cut has already run the round, so the metrics
-    * are only a listener-bus hop away; a lazy one never delivers them. */
-  private val RoundMetricsWait = scala.concurrent.duration.FiniteDuration(30, "s")
+  /** [[roundMetrics]]: how long a round waits for its metrics before it
+    * runs the probe, and how long it waits for the probe's. */
+  private val RoundMetricsGrace = scala.concurrent.duration.FiniteDuration(100, "ms")
+  private val ProbeWait = scala.concurrent.duration.FiniteDuration(10, "min")
 
   /** A CC round's observed metrics, or an IllegalStateException naming the
-    * `truncate` contract instead of an indefinite wait. */
-  private def roundMetrics(obs: org.apache.spark.sql.Observation): org.apache.spark.sql.Row =
-    try scala.concurrent.Await.result(obs.future, RoundMetricsWait)
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
+    * `truncate` contract instead of an indefinite wait.
+    *
+    * Spark 4.1 completes an Observation from a QueryExecutionListener
+    * (`classic.ObservationManager`), i.e. on the asynchronous listener bus,
+    * after the action that ran the round has returned. If the metrics are
+    * not in after a short grace, the round runs a probe: a one-row query
+    * with its own Observation, started after `truncate` returned. The bus
+    * delivers in posting order, so once the probe's metrics are in, the
+    * round's are too, unless no action ran the round (a lazy cut). The wait
+    * is as long as the bus takes to reach the probe; `ProbeWait` only ends
+    * it on a bus that stopped delivering. */
+  private def roundMetrics(spark: org.apache.spark.sql.SparkSession,
+      obs: org.apache.spark.sql.Observation): org.apache.spark.sql.Row = {
+    def await(f: scala.concurrent.Future[_], d: scala.concurrent.duration.FiniteDuration): Boolean =
+      try { scala.concurrent.Await.ready(f, d); true }
+      catch { case _: java.util.concurrent.TimeoutException => false }
+    if (!await(obs.future, RoundMetricsGrace)) {
+      val probe = org.apache.spark.sql.Observation()
+      spark.range(1).observe(probe, count(lit(1))).collect()
+      if (!await(probe.future, ProbeWait))
         throw new IllegalStateException(
-          s"connected-components round metrics did not arrive within $RoundMetricsWait: " +
-            "`truncate` must run an eager Spark action on the round frame " +
-            "(e.g. _.localCheckpoint(true), _.checkpoint(true) or a write + read-back); " +
-            "a lazy cut such as identity never executes the round")
+          s"connected-components round metrics: the listener bus delivered nothing within $ProbeWait")
     }
+    obs.future.value.map(_.get).getOrElse(throw new IllegalStateException(
+      "connected-components round metrics never arrived: `truncate` must run an eager " +
+        "Spark action on the round frame (e.g. _.localCheckpoint(true), _.checkpoint(true) " +
+        "or a write + read-back); a lazy cut such as identity never executes the round"))
+  }
 
   private def warnIfUnconverged(r: CcResult, who: String): Unit =
     if (!r.converged)

@@ -25,8 +25,9 @@ import graft.sources.TableSource.{CsvTable, FormatError, IoError, SourceContentE
   * formats are public specs: ESRI Shapefile Technical Description 1998,
   * dBASE III/IV DBF layout). Like the xlsx path, parsing is driver-side and
   * size-guarded — a zipped upload is definitionally a small single file (zip
-  * members can't be split for parallel scan); the resulting DataFrame is a
-  * single-partition local relation (`TableSource.localFrame`) and flows
+  * members can't be split for parallel scan); the resulting DataFrame is
+  * `TableSource.localFrame` (up to its cell bound a single-partition local
+  * relation) and flows
   * through the same validation plan as any source.
   *
   * The writer half emits a minimal valid point-shapefile zip (DBF all-C

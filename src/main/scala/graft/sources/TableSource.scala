@@ -137,17 +137,28 @@ object TableSource {
   }
 
   /** The frame for rows that already sit on the driver (a parsed upload, a
-    * transposed table, an empty result): a local relation in ONE partition.
-    * A local relation carries its size, so the planner broadcasts it into
-    * every join; the single partition satisfies every aggregate and window
-    * distribution above it, so a whole validation over it plans no hash
-    * exchange. Both halves are needed: an RDD-backed frame has no size
-    * statistics (sort-merge joins, re-shuffled to the shuffle partition
-    * count even after a coalesce), and a bare local relation is still
-    * sliced `defaultParallelism` ways. `coalesce(1)` merges the slices
-    * without a shuffle. */
+    * transposed table, an empty result). Up to [[MaxLocalCells]] cells it
+    * is a local relation in ONE partition. A local relation carries its
+    * size, so the planner broadcasts it into every join; the single
+    * partition satisfies every aggregate and window distribution above it,
+    * so a whole validation over it plans no hash exchange. Both halves are
+    * needed: an RDD-backed frame has no size statistics (sort-merge joins,
+    * re-shuffled to the shuffle partition count even after a coalesce), and
+    * a bare local relation is still sliced `defaultParallelism` ways.
+    * `coalesce(1)` merges the slices without a shuffle. Larger inputs stay
+    * an RDD of `defaultParallelism` slices: one task then does all the
+    * work, and a local relation holds a converted copy of every row. */
   private[graft] def localFrame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+    if (rows.size.toLong * schema.size <= MaxLocalCells)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
+    else spark.createDataFrame(spark.sparkContext.parallelize(rows), schema)
+
+  /** Cells (rows × columns) up to which [[localFrame]] builds one local
+    * partition. runCsv over a 7-column upload on a 4-core host: one
+    * partition was faster up to 30k rows (210k cells) and slower from 50k
+    * (350k); at 1M rows a local relation ran out of a 3 GB heap, with or
+    * without the coalesce, where the RDD frame validated in about 40 s. */
+  private[graft] val MaxLocalCells = 200000L
 
   /** JSON reader: array-of-objects → DataFrame. A GeoJSON FeatureCollection
     * (a `features` array) is FLATTENED like the reference does

@@ -22,9 +22,9 @@ import graft.sources.TableSource.{CsvTable, FormatError, IoError, SourceContentE
   * Scale note: an Excel workbook is definitionally a small single file (a
   * zip member can't be split for parallel scan), so — like the reference,
   * and like `TableSource.transpose` — parsing is driver-side and
-  * size-guarded; the resulting DataFrame is a single-partition local
-  * relation (`TableSource.localFrame`, so the validation of an upload plans
-  * no shuffle) and flows through the exact same validation plan as any
+  * size-guarded; the resulting DataFrame is `TableSource.localFrame` (up
+  * to its cell bound a single-partition local relation, so the validation
+  * of an upload plans no shuffle) and flows through the exact same validation plan as any
   * parquet/CSV source. Big data never arrives as xlsx; fixture and upload
   * data does.
   *

@@ -1,6 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Per-column statistics in ONE wide aggregation pass (north-star operator:
@@ -11,8 +11,9 @@ import org.apache.spark.sql.functions._
   */
 object ColumnStats {
 
-  /** [[profile]]'s concurrent jobs: at most this many in flight, and a
-    * fixed bound on the wait for all of them. */
+  /** [[profile]]'s exact-distinct jobs: at most this many in flight (plus
+    * the base job on the caller's thread), and a fixed bound on the wait
+    * for them once the base job is done. */
   private val MaxJobsInFlight = 3
   private val JobsWait = scala.concurrent.duration.FiniteDuration(1, "h")
 
@@ -44,37 +45,11 @@ object ColumnStats {
     // column), submitted CONCURRENTLY with the base agg from driver futures
     // (guide §2.6: actions are only sequential because the driver calls
     // them sequentially). Same exact results, ~k× less pre-shuffle volume.
-    // The jobs run on their own pool of MaxJobsInFlight threads under one
-    // job group; the futures are combined on the completing thread, so the
-    // first failure (or the fixed wait running out) surfaces at once,
-    // cancels the group's running and queued jobs and is rethrown.
-    import scala.concurrent.{Await, ExecutionContext, Future}
     val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val group = s"graft.profile.${java.util.UUID.randomUUID()}"
-    val pool = ExecutionContext.fromExecutorService(
-      java.util.concurrent.Executors.newFixedThreadPool(MaxJobsInFlight))
-    def job[T](body: => T): Future[T] = Future {
-      sc.setJobGroup(group, "graft.profile", interruptOnCancel = true)
-      try body finally sc.clearJobGroup()
-    }(pool)
-    val rowF = job(wide.collect()(0)) // melt to long format driver-side (one row collected)
-    val distinctF: Seq[Future[Long]] =
-      if (!exactDistinct) Nil
-      else cols.map(c => job(df.select(col(c)).agg(countDistinct(col(c))).head().getLong(0)))
-    val all = {
-      implicit val onCompletion: ExecutionContext = ExecutionContext.parasitic
-      rowF.zip(Future.sequence(distinctF))
-    }
-    val (row, distincts) =
-      try Await.result(all, JobsWait)
-      catch {
-        case e: Throwable =>
-          pool.shutdownNow()
-          sc.cancelJobGroupAndFutureJobs(group)
-          throw e
-      } finally pool.shutdown()
-    val dcounts: Map[String, Long] = cols.zip(distincts).toMap
+    // melt to long format driver-side (one row collected)
+    val (row, dcounts) =
+      if (!exactDistinct) (wide.collect()(0), Map.empty[String, Long])
+      else withExactDistincts(df, cols, wide)
     import spark.implicits._
     cols.map { c =>
       (
@@ -86,6 +61,44 @@ object ColumnStats {
         Option(row.getAs[Any](s"${c}__max")).map(_.asInstanceOf[Double])
       )
     }.toDF("column", "cnt", "nulls", "dcount", "vmin", "vmax")
+  }
+
+  /** [[profile]]'s base row and exact per-column distinct counts: the base
+    * job runs on the caller's thread while the distinct jobs run on their
+    * own pool of MaxJobsInFlight threads, all under one job tag (the
+    * caller's job group stays in force). The first failure, or the fixed
+    * wait on the distinct jobs running out, cancels the tag's jobs and is
+    * rethrown. */
+  private def withExactDistincts(df: DataFrame, cols: Seq[String], wide: DataFrame): (Row, Map[String, Long]) = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val onCompletion: ExecutionContext = ExecutionContext.parasitic
+    val sc = df.sparkSession.sparkContext
+    val tag = s"graft.profile.${java.util.UUID.randomUUID()}"
+    val pool = ExecutionContext.fromExecutorService(
+      java.util.concurrent.Executors.newFixedThreadPool(MaxJobsInFlight))
+    def cancel(): Unit = { pool.shutdownNow(); sc.cancelJobsWithTag(tag) }
+    sc.addJobTag(tag)
+    try {
+      val distincts = Future.sequence(cols.map { c =>
+        Future {
+          sc.addJobTag(tag)
+          df.select(col(c)).agg(countDistinct(col(c))).head().getLong(0)
+        }(pool)
+      })
+      distincts.failed.foreach(_ => cancel())
+      val row =
+        try wide.collect()(0)
+        catch {
+          case e: Throwable =>
+            cancel()
+            throw distincts.value.flatMap(_.failed.toOption).getOrElse(e)
+        }
+      try (row, cols.zip(Await.result(distincts, JobsWait)).toMap)
+      catch { case e: Throwable => cancel(); throw e }
+    } finally {
+      sc.removeJobTag(tag)
+      pool.shutdown()
+    }
   }
 
   /** Top-k heavy hitters of a (stringified) column via one mergeable

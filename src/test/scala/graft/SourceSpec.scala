@@ -63,6 +63,23 @@ class SourceSpec extends SparkSpec {
     }
   }
 
+  test("uploads up to MaxLocalCells are one partition; larger ones keep defaultParallelism slices") {
+    val schema = TableSchema(Seq(
+      Field("id", "integer", constraints = fc.copy(required = true, unique = true)),
+      Field("name")
+    ))
+    val large = (TableSource.MaxLocalCells / 3 + 1).toInt // id, name, _row_number
+    for ((n, parts) <- Seq(100 -> 1, large -> spark.sparkContext.defaultParallelism)) {
+      // the last row repeats id 1: one unique error either way
+      val path = writeTmp(s"rows$n.csv",
+        (Seq("id,name") ++ (1 to n).map(i => s"${if (i == n) 1 else i},x")).mkString("\n"))
+      val Right(t) = TableSource.readCsv(spark, path): @unchecked
+      assert(t.df.rdd.getNumPartitions == parts, s"$n rows")
+      val (report, _) = ValidationRunner.runCsv(spark, path, schema)
+      assert(report.tables.head.rowCount == n + 1 && report.errorCount == 1, s"$n rows")
+    }
+  }
+
   test("extra-value on rows wider than the header") {
     val path = writeTmp("extra.csv", "a,b\n1,2\n1,2,3\n")
     val Right(csv) = TableSource.readCsv(spark, path): @unchecked
